@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .link import connected_components
 from .session import fan_out
+from .skew import blocked_pairs
 
 # Mersenne prime 2^31-1: params and residues stay below 2^31, so the
 # a*h+b permutation never exceeds 2^62 — safe under ANSI long
@@ -119,37 +120,7 @@ def lsh_candidate_pairs(sigs: DataFrame, bands: int = 16,
         *[F.struct(F.lit(j).alias("band"), band_cols[j].alias("key"))
           for j in range(bands)]
     )).alias("bk")).select("id", "bk.band", "bk.key")
-    # skew guard BEFORE the collect: a single hot band key (e.g. every
-    # empty/template page sharing one signature band) would otherwise
-    # accumulate its full membership in ONE aggregation buffer — a
-    # TypedImperativeAggregate buffer for a single group cannot spill,
-    # so that's an executor OOM at crawl scale.  The guard is a WINDOW
-    # count over (band, key): WindowExec buffers a group in a SPILLABLE
-    # external sorter (disk, not an agg buffer), the filter drops
-    # oversized keys, and the collect_list then never sees a group
-    # larger than max_bucket.  One exchange feeds count, filter, and
-    # collect — the window preserves the (band, key) partitioning, so
-    # the groupBy below adds no second shuffle (plan-shape pinned by
-    # test; the previous count + left-semi-join guard cost an extra
-    # exchange because the partial count sits above its own shuffle).
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "key")
-    buckets = (
-        banded.withColumn("n_b", F.count("*").over(w))
-        .filter((F.col("n_b") > 1) & (F.col("n_b") <= max_bucket))
-        .groupBy("band", "key")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-    )
-    pairs = (
-        buckets.select(F.explode(F.expr(
-            "flatten(transform(ids, (x, i) -> "
-            "transform(slice(ids, i + 2, size(ids)), y -> struct(x as a, y as b))))"
-        )).alias("p"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
-    return pairs
+    return blocked_pairs(banded, ["band", "key"], "id", max_bucket)
 
 
 def jaccard_verify(pairs: DataFrame, docs: DataFrame, text_col: str = "text",

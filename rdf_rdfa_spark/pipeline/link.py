@@ -134,6 +134,11 @@ def _cc_rounds(e: DataFrame, max_iter: int) -> DataFrame:
         labels = jumped.select("node", "component")
         if changed == 0:
             break
+    else:
+        raise ValueError(
+            "connected components did not converge within %d rounds "
+            "(labels still changing) — raise max_iter for graphs of "
+            "this diameter" % max_iter)
     return labels
 
 

@@ -1,29 +1,22 @@
-"""Explicit skew handling: salted two-phase aggregation + hot-key
-isolation (north_rule: "partitioning / shuffle / skew handled
-explicitly"; template-heavy hosts make per-host keys Zipf-skewed).
+"""Explicit skew handling: template-heavy hosts make per-host keys
+Zipf-skewed, so no hot key may pin a single reducer.
 
-Two complementary techniques:
+- ``salted_agg``: two-phase aggregation for composable partials
+  (count/sum/min/max/collect pieces); a hot key's rows spread over
+  ``salt`` reducers.  It matters when the aggregation state is large
+  (collect_list/collect_set); plain count/sum already get map-side
+  partial aggregation.
+- ``capped_blocks`` / ``blocked_pairs``: the blocking stage every
+  candidate-pair generator shares — drop blocks above ``max_bucket``
+  before any membership list exists, then expand each surviving block
+  into its ``a < b`` pairs.
 
-1. ``salted_agg`` — for algebraic aggregations whose partial results
-   compose (count/sum/min/max/collect pieces): append a salt to the
-   key, aggregate (key, salt) partials, then aggregate partials by
-   key. A hot key's rows spread across `salt` reducers instead of one.
-   (For plain count/sum Spark's map-side partial aggregation already
-   achieves this — salting matters when the aggregation state is
-   large, e.g. collect_list/collect_set, where one reducer would
-   otherwise hold the whole hot group.)
-
-2. ``split_hot_keys`` — for joins: count keys, broadcast-join the
-   frequent ones separately (broadcast side replicated), sort-merge
-   the long tail. AQE's skew-join (enabled in session.py) does this
-   adaptively at runtime; this explicit variant is for when the hot
-   set is known ahead (template hosts) and for engines/paths AQE
-   can't split (e.g. aggregations).
+Skewed joins are left to AQE's skew-join (enabled in session.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def salted_agg(
@@ -66,31 +59,39 @@ def host_rollup(triples: DataFrame, salt: int = 16) -> DataFrame:
     ).select("host", "n_triples")
 
 
-def split_hot_keys(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    hot_threshold: int = 100_000,
-    max_hot_keys: int = 10_000,
-) -> DataFrame:
-    """Skew-aware join: keys above hot_threshold in ``big`` join via
-    broadcast of the matching ``small`` slice; the tail joins
-    normally. Returns the union (inner join semantics).
+def capped_blocks(df: DataFrame, key_cols: list, max_bucket: int) -> DataFrame:
+    """Rows of ``df`` in blocks (``key_cols``) of 2..``max_bucket`` rows,
+    with the block size as ``n_b``.
 
-    Contract: the hot set is driver-collected, so it is explicitly
-    CAPPED at ``max_hot_keys`` (the heaviest keys win).  The cap bounds
-    driver memory to ~max_hot_keys key strings; by definition at most
-    |big| / hot_threshold keys can exceed the threshold, so at 100 TB
-    with the default threshold the cap never binds in practice."""
-    counts = big.groupBy(key).agg(F.count("*").alias("_n"))
-    hot = (counts.filter(F.col("_n") >= hot_threshold)
-           .orderBy(F.desc("_n")).limit(max_hot_keys).select(key))
-    hot_rows = [r[0] for r in hot.collect()]
-    if not hot_rows:
-        return big.join(small, key)
-    big_hot = big.filter(F.col(key).isin(hot_rows))
-    big_cold = big.filter(~F.col(key).isin(hot_rows))
-    small_hot = small.filter(F.col(key).isin(hot_rows))
-    joined_hot = big_hot.join(F.broadcast(small_hot), key)
-    joined_cold = big_cold.join(small, key)
-    return joined_hot.unionByName(joined_cold)
+    A WINDOW count, not a groupBy count: WindowExec buffers a block in
+    a SPILLABLE sorter, while a collect_list over a template-hot block
+    would hold all of it in ONE non-spillable agg buffer (an executor
+    OOM at crawl scale).  The window keeps the ``key_cols``
+    partitioning, so a groupBy on the same keys above it shares its
+    exchange (a count + semi-join guard costs one more).  Plan shape
+    pinned by the ``*_bucket_cap_*`` tests."""
+    w = Window.partitionBy(*key_cols)
+    return (df.withColumn("n_b", F.count("*").over(w))
+            .filter((F.col("n_b") > 1) & (F.col("n_b") <= max_bucket)))
+
+
+def blocked_pairs(df: DataFrame, key_cols: list, item: str,
+                  max_bucket: int) -> DataFrame:
+    """Distinct pairs ``(a, b)``, ``a < b``, of ``item`` values sharing a
+    block (``key_cols``) of at most ``max_bucket`` members.
+
+    The cap applies before the collect_list, so no agg buffer holds
+    more than ``max_bucket`` items.  Pairs come from the sorted member
+    list (no self-join); a struct item sorts by its first field."""
+    return (
+        capped_blocks(df, key_cols, max_bucket)
+        .groupBy(*key_cols)
+        .agg(F.sort_array(F.collect_list(item)).alias("ids"))
+        .select(F.explode(F.expr(
+            "flatten(transform(ids, (x, i) -> "
+            "transform(slice(ids, i + 2, size(ids)), "
+            "y -> struct(x as a, y as b))))"
+        )).alias("p"))
+        .select("p.a", "p.b")
+        .distinct()
+    )

@@ -44,14 +44,6 @@ def is_iri(t) -> bool:
     return t is not None and t[0] == IRI
 
 
-def is_bnode(t) -> bool:
-    return t is not None and t[0] == BNODE
-
-
-def is_literal(t) -> bool:
-    return t is not None and t[0] == LITERAL
-
-
 def is_resource(t) -> bool:
     return t is not None and t[0] in (IRI, BNODE)
 

@@ -17,6 +17,7 @@ from ..pipeline.canonicalize import (  # noqa: F401  (re-export)
     lsh_candidate_pairs,
     minhash_signatures,
 )
+from ..pipeline.skew import blocked_pairs, capped_blocks
 
 
 def exact_duplicates(docs: DataFrame, text_col: str = "text",
@@ -136,9 +137,9 @@ def simhash_near_dups(docs: DataFrame, text_col: str = "text",
     skew guard: on a boilerplate-heavy crawl one hot block value (e.g.
     near-empty template pages sharing a signature block) would make the
     within-bucket expansion quadratic in a single reducer, so oversized
-    buckets are dropped (same posture as lsh_candidate_pairs in
-    canonicalize.py).  Raise it (or pass 1 << 40) for exhaustive recall
-    on bounded corpora — the value-oracled entry query does."""
+    buckets are dropped (the shared ``skew.blocked_pairs`` stage).
+    Raise it (or pass 1 << 40) for exhaustive recall on bounded
+    corpora — the value-oracled entry query does."""
     sh = simhash(docs, text_col, id_col, hash_fn, nbits)
     blocks = sh.select(
         F.struct("id", "simhash").alias("item"),
@@ -148,38 +149,13 @@ def simhash_near_dups(docs: DataFrame, text_col: str = "text",
             for b in range(4)
         ])).alias("e"),
     ).select("item", "e.blk", "e.val")
-    # skew guard BEFORE the collect (same shape as lsh_candidate_pairs):
-    # a WINDOW count over (blk, val) — WindowExec buffers a group in a
-    # spillable external sorter, never an agg buffer — filters
-    # oversized blocks so the collect_list below never materializes a
-    # hot block's full membership.  The window preserves the (blk, val)
-    # partitioning, so count, filter, and collect share ONE exchange.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("blk", "val")
-    buckets = (
-        blocks.withColumn("n_b", F.count("*").over(w))
-        .filter((F.col("n_b") > 1) & (F.col("n_b") <= max_bucket))
-        .groupBy("blk", "val")
-        # sort_array on struct(id, simhash) orders by id → pairs below
-        # come out with a < b by construction
-        .agg(F.sort_array(F.collect_list("item")).alias("items"))
-    )
-    cand = (
-        buckets.select(F.explode(F.expr(
-            "flatten(transform(items, (x, i) -> "
-            "transform(slice(items, i + 2, size(items)), "
-            "y -> struct(x.id as a, y.id as b, "
-            "x.simhash as ha, y.simhash as hb))))"
-        )).alias("p"))
-        .select("p.a", "p.b", "p.ha", "p.hb")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    # sort_array on struct(id, simhash) orders by id → a.id < b.id
+    cand = blocked_pairs(blocks, ["blk", "val"], "item", max_bucket)
+    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        cand.withColumn("hamming", hamming)
+        cand.select(F.col("a.id").alias("a"), F.col("b.id").alias("b"),
+                    hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
     )
 
 
@@ -214,7 +190,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     "English, ~2k chars" is a single bucket of millions of docs, which
     would put O(|bucket|²) pair generation on one key.  Oversized
     buckets are dropped by a WINDOW count sharing the bucket exchange
-    (the repo-wide single-exchange guard shape; the old groupBy-count +
+    (``skew.capped_blocks``; the old groupBy-count +
     broadcast-semi guard cost two extra exchanges and re-evaluated the
     gram expression per reference).  For recall over huge buckets,
     generate candidates with the MinHash LSH path
@@ -250,11 +226,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, threshold: float = 0.8,
     # posting explode — without it the shingling expression re-runs
     # per reference (measured 3 full evaluations in the old plan)
     g = g.localCheckpoint(eager=False)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("bucket")
-    g = (g.withColumn("n_b", F.count("*").over(w))
-         .filter((F.col("n_b") > 1) & (F.col("n_b") <= max_bucket)))
+    g = capped_blocks(g, ["bucket"], max_bucket)
     # Inverted-index exact jaccard (set-similarity join): instead of
     # the all-pairs-in-bucket join computing array_intersect per pair
     # (O(Σ bucket² × grams/doc) whatever the overlap), explode postings

@@ -16,6 +16,7 @@ import math
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..pipeline.canonicalize import _splitmix64
+from ..pipeline.skew import blocked_pairs
 
 
 def _dot(a, b):
@@ -318,22 +319,7 @@ def emb_lsh_candidate_pairs(v: DataFrame, dim: int, n_tables: int,
     ]
     banded = v.select("id", F.posexplode(F.array(*tables))
                       .alias("tbl", "bucket"))
-    w = Window.partitionBy("tbl", "bucket")
-    buckets = (
-        banded.withColumn("n_b", F.count("*").over(w))
-        .filter((F.col("n_b") > 1) & (F.col("n_b") <= max_bucket))
-        .groupBy("tbl", "bucket")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-    )
-    return (
-        buckets.select(F.explode(F.expr(
-            "flatten(transform(ids, (x, i) -> "
-            "transform(slice(ids, i + 2, size(ids)), "
-            "y -> struct(x as a, y as b))))"
-        )).alias("p"))
-        .select("p.a", "p.b")
-        .distinct()
-    )
+    return blocked_pairs(banded, ["tbl", "bucket"], "id", max_bucket)
 
 
 def cosine_near_dup_pairs_lsh(vectors: DataFrame, threshold: float = 0.99,
@@ -362,7 +348,7 @@ def cosine_near_dup_pairs_lsh(vectors: DataFrame, threshold: float = 0.99,
     - ``max_bucket`` is the skew guard: a WINDOW count over
       ``(tbl, bucket)`` drops template-hot sign-pattern buckets BEFORE
       any pair expansion, sharing one exchange with the collect_list
-      (the exact ``lsh_candidate_pairs``/``simhash_near_dups`` shape);
+      (the shared ``skew.blocked_pairs`` stage);
     - pairs are expanded in-bucket from the sorted id list (a < b by
       construction), deduped bare, and only the SURVIVING pairs fetch
       their two vectors back via shuffle_hash joins (pinned: the

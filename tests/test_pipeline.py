@@ -111,6 +111,17 @@ def test_connected_components_long_chain(spark):
     assert set(cc.values()) == {"n000"}
 
 
+def test_connected_components_cap_raises(spark):
+    """A chain that needs more rounds than max_iter must raise, not
+    return half-propagated labels as if they were clusters."""
+    edges = spark.createDataFrame(
+        [("n%02d" % i, "n%02d" % (i + 1)) for i in range(15)],
+        "src string, dst string",
+    )
+    with pytest.raises(ValueError, match="did not converge"):
+        connected_components(edges, max_iter=1)
+
+
 def test_link_entities_broadcast_and_shuffle_paths(spark):
     """link_entities must rewrite identically whether the cluster map
     is broadcast (default) or falls back to a shuffle join above the
@@ -481,22 +492,6 @@ def test_salted_agg_matches_plain(spark, sf_dir):
     # the corpus really is skewed: host0 carries the biggest share
     top = max(plain, key=lambda t: t[1])
     assert top[0] == "host0.example.org"
-
-
-def test_split_hot_keys(spark):
-    from rdf_rdfa_spark.pipeline.skew import split_hot_keys
-
-    big = spark.createDataFrame(
-        [("hot", i) for i in range(500)] + [("cold%d" % i, i) for i in range(20)],
-        "k string, v long",
-    )
-    small = spark.createDataFrame(
-        [("hot", "H")] + [("cold%d" % i, "C%d" % i) for i in range(20)],
-        "k string, tag string",
-    )
-    got = split_hot_keys(big, small, "k", hot_threshold=100)
-    plain = big.join(small, "k")
-    assert got.count() == plain.count() == 520
 
 
 def test_ivf_ann_recall(spark, sf_dir):
@@ -1217,6 +1212,19 @@ def test_path_closure_matches_python_reference(spark):
                         want.add((a, d))
                         grew = True
         assert got == want, seed
+
+
+def test_path_closure_cap_raises(spark):
+    """The doubling closure must raise when its round cap ends the
+    loop before the fixpoint, not return a partial closure."""
+    from rdf_rdfa_spark.pipeline.bgpq import _closure
+
+    edges = spark.createDataFrame(
+        [("n%02d" % i, "n%02d" % (i + 1)) for i in range(15)],
+        "s string, o string",
+    )
+    with pytest.raises(ValueError, match="did not converge"):
+        _closure(edges, max_iters=1)
 
 
 def test_sparql_bucket_pruning_on_store(spark, sf_dir, tmp_path):
